@@ -231,11 +231,15 @@ def wedge_pairs(
     sf0.1 with an EMPTY hot set, so the threshold should be wired only
     on corpora whose part-degree tail is real (SCALE.md records the
     rule; AQE's skew-join split cannot divide a single hub key, which is
-    exactly what the salt does)."""
+    exactly what the salt does). ``n_salts <= 1`` splits nothing, so it
+    takes the plain self-join (a zero salt modulus fails under ANSI and,
+    without it, nulls every hot row's salt and drops its pairs). Columns
+    other than ``node_col`` and ``part_col`` are ignored."""
+    p = part_col
+    op = op.select(node_col, p)
     a = op.withColumnsRenamed({node_col: "c1"})
     b = op.withColumnsRenamed({node_col: "c2"})
-    p = part_col
-    if hot_part_threshold is None:
+    if hot_part_threshold is None or n_salts <= 1:
         wpairs = a.join(b, p)
     else:
         deg = op.groupBy(p).agg(F.count(F.lit(1)).alias("_d"))

@@ -1455,36 +1455,25 @@ def streaming_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-61/62/63 proven under the driver, not just pytest: the events
     fixture replayed through the REAL Structured Streaming path (file
     source → watermark → tumbling hourly max_by aggregate → append-mode
-    memory sink, AvailableNow trigger), returned as the final table. The
+    output, AvailableNow trigger) as three ts-range micro-batches, so
+    windows span batches and the watermark advances between them; the
+    emitted rows are appended at rest and returned as the final table. The
     oracle is the batch tumbling SQL restricted to closed windows — append
     mode only emits a window once the 2 h watermark passes its end, so
     emitted ≡ {windows with end ≤ max(ts) − 2 h}, and a hash match proves
     the incremental execution (state store, watermark bookkeeping,
-    late-data semantics) agrees with the batch plan row for row."""
-    import os as _os
-    import shutil
-    import tempfile
-    import uuid
+    late-data semantics) agrees with the batch plan row for row. The ts
+    split keeps every batch at or after the previous batch's event time,
+    so no row arrives behind the watermark."""
+    from ..streaming.ingest import append_batch, hourly_tumbling_agg, replay
 
-    from ..streaming.ingest import (
-        hourly_tumbling_agg,
-        read_events_stream,
-        run_to_memory,
+    return replay(
+        load_events(spark, sf_dir),
+        "ts",
+        append_batch,
+        spark.read.parquet,
+        through=hourly_tumbling_agg,
     )
-
-    name = f"stream_parity_{uuid.uuid4().hex[:8]}"
-    td = tempfile.mkdtemp(prefix="stream_parity_")
-    try:
-        shutil.copy(
-            _os.path.join(sf_dir, "events.parquet"),
-            _os.path.join(td, "part-000.parquet"),
-        )
-        # memory sink materializes on the driver at run time, so the temp
-        # source dir can be deleted as soon as the stream terminates
-        run_to_memory(hourly_tumbling_agg(read_events_stream(spark, td)), name)
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
-    return spark.table(name)
 
 
 @register(
@@ -1524,25 +1513,15 @@ def streaming_stateful_ffill_parity(spark: SparkSession, sf_dir: str) -> DataFra
     unbounded-preceding window the oracle computes.
 
     Harness: the gappy hourly macro grid (indicator × global hour grid,
-    NULL where no observation) is built in batch, written as THREE
-    time-ordered parquet chunks with strictly increasing mtimes, and
-    replayed with ``maxFilesPerTrigger=1`` — so the stream executes three
-    micro-batches and every fill that crosses a chunk boundary must come
-    out of the state store, not the in-batch sort. A hash match therefore
-    proves cross-batch state carry, not just per-batch ffill. (The chunk
-    write is harness scaffolding, same as `streaming_batch_parity`'s file
-    copy — the measured operator is the stream.) The chunks are written
-    Spark-side with ``repartitionByRange(3, ts, indicator)`` — a global
-    range split, so every chunk is a contiguous time slice (per indicator
-    too) and nothing is materialized on the driver however long the
-    replayed range grows."""
-    import os as _os
-    import shutil
-    import tempfile
-    import time as _time
-    import uuid
-
-    from ..streaming.ingest import run_to_memory
+    NULL where no observation) is built in batch and replayed by
+    `streaming.ingest.replay` as THREE ts-range micro-batches in time
+    order — so every fill that crosses a chunk boundary must come out of
+    the state store, not the in-batch sort. A hash match therefore
+    proves cross-batch state carry, not just per-batch ffill. The range
+    split is Spark-side, so every chunk is a contiguous time slice (per
+    indicator too) and nothing is materialized on the driver however
+    long the replayed range grows."""
+    from ..streaming.ingest import append_batch, replay
     from ..streaming.stateful import stateful_ffill
 
     ev = load_events(spark, sf_dir)
@@ -1563,32 +1542,9 @@ def streaming_stateful_ffill_parity(spark: SparkSession, sf_dir: str) -> DataFra
         .join(hourly, ["indicator", "hour"], "left")
         .select("indicator", F.col("hour").alias("ts"), F.col("value").cast("double"))
     )
-
-    name = f"stateful_ffill_{uuid.uuid4().hex[:8]}"
-    td = tempfile.mkdtemp(prefix="stateful_ffill_")
-    try:
-        # Range-partitioned distributed write: part-00000..2 hold ascending
-        # (ts, indicator) ranges (Spark writes timestamps as µs-compatible
-        # physical types, so the stream reader accepts them directly).
-        cells.repartitionByRange(3, "ts", "indicator").write.mode(
-            "overwrite"
-        ).parquet(td)
-        parts = sorted(p for p in _os.listdir(td) if p.endswith(".parquet"))
-        now = _time.time()
-        for k, fname in enumerate(parts):
-            # strictly increasing mtimes in range order: the file source
-            # processes oldest first, pinning micro-batch order to time order
-            path = _os.path.join(td, fname)
-            _os.utime(path, (now - 20 + 10 * k, now - 20 + 10 * k))
-        stream = (
-            spark.readStream.schema("indicator string, ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(td)
-        )
-        run_to_memory(stateful_ffill(stream), name)
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
-    return spark.table(name)
+    return replay(
+        cells, "ts", append_batch, spark.read.parquet, through=stateful_ffill
+    )
 
 
 # --------------------------------------------------------------------------
@@ -2106,54 +2062,35 @@ def streaming_indicators_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans batches and a hash match proves the cross-batch MERGE law, not
     just per-batch aggregation.  Per-tick work is delta-sized; the bar
     state is bars-sized (hours × symbols), never ticks-sized."""
-    import shutil
-    import tempfile
+    from ..streaming.ingest import replay
 
-    from ..streaming.ingest import read_events_stream
-
-    td = tempfile.mkdtemp(prefix="stream_ti_")
-    src_dir = f"{td}/src"
-    bars_dir = f"{td}/state_bars"
-    try:
-        load_events(spark, sf_dir).repartitionByRange(3, "event_id").write.mode(
-            "overwrite"
-        ).parquet(src_dir)
-
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            order_key = F.struct("ts", "event_id")
-            (
-                batch_df.groupBy(
-                    F.col("user_id").alias("symbol"),
-                    F.date_trunc("hour", "ts").alias("hour_ts"),
-                )
-                .agg(
-                    F.max_by("value", order_key).alias("close"),
-                    F.max(order_key).alias("okey"),
-                )
-                .write.mode("append")
-                .parquet(bars_dir)
+    def per_batch(batch_df: DataFrame, batch_id: int, state: str) -> None:
+        order_key = F.struct("ts", "event_id")
+        (
+            batch_df.groupBy(
+                F.col("user_id").alias("symbol"),
+                F.date_trunc("hour", "ts").alias("hour_ts"),
             )
-
-        q = (
-            read_events_stream(spark, src_dir, max_files_per_trigger=1)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
+            .agg(
+                F.max_by("value", order_key).alias("close"),
+                F.max(order_key).alias("okey"),
+            )
+            .write.mode("append")
+            .parquet(state)
         )
-        q.awaitTermination()
+
+    def serve(state: str) -> DataFrame:
         merged = (
-            spark.read.parquet(bars_dir)
+            spark.read.parquet(state)
             .groupBy("symbol", "hour_ts")
             .agg(F.max_by("close", "okey").alias("close"))
             .withColumn(
                 "close_fp", F.round(F.col("close") * 1000, 0).cast("long")
             )
         )
-        # localCheckpoint: the result must outlive the temp dirs
-        return _indicators_from_bars(merged).localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+        return _indicators_from_bars(merged)
+
+    return replay(load_events(spark, sf_dir), "event_id", per_batch, serve)
 
 
 # --------------------------------------------------------------------------
@@ -2322,50 +2259,30 @@ def streaming_hopping_volume_parity(
     under any batch split (three range-split micro-batches, so most
     windows span batches and the match proves the cross-batch merge
     law)."""
-    import shutil
-    import tempfile
+    from ..streaming.ingest import replay
 
-    from ..streaming.ingest import read_events_stream
-
-    td = tempfile.mkdtemp(prefix="stream_hopping_")
-    src_dir = f"{td}/src"
-    hours_dir = f"{td}/state_hours"
-    try:
-        load_events(spark, sf_dir).repartitionByRange(3, "event_id").write.mode(
-            "overwrite"
-        ).parquet(src_dir)
-
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.groupBy(
-                    F.col("user_id").alias("symbol"),
-                    F.date_trunc("hour", "ts").alias("hour_ts"),
-                )
-                .agg(
-                    F.sum(F.col("value").cast("decimal(38,6)")).alias(
-                        "sum_dec"
-                    ),
-                    F.count(F.lit(1)).alias("n_ticks"),
-                    # non-null value count, tracked separately so the
-                    # served average divides by count(value) like
-                    # exact_avg / the oracle — not count(*) — and the
-                    # parity holds even if the feed carries null values
-                    F.count("value").alias("n_vals"),
-                )
-                .write.mode("overwrite")
-                .parquet(f"{hours_dir}/batch_id={batch_id}")
+    def per_batch(batch_df: DataFrame, batch_id: int, state: str) -> None:
+        (
+            batch_df.groupBy(
+                F.col("user_id").alias("symbol"),
+                F.date_trunc("hour", "ts").alias("hour_ts"),
             )
-
-        q = (
-            read_events_stream(spark, src_dir, max_files_per_trigger=1)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
+            .agg(
+                F.sum(F.col("value").cast("decimal(38,6)")).alias("sum_dec"),
+                F.count(F.lit(1)).alias("n_ticks"),
+                # non-null value count, tracked separately so the
+                # served average divides by count(value) like
+                # exact_avg / the oracle — not count(*) — and the
+                # parity holds even if the feed carries null values
+                F.count("value").alias("n_vals"),
+            )
+            .write.mode("overwrite")
+            .parquet(f"{state}/batch_id={batch_id}")
         )
-        q.awaitTermination()
+
+    def serve(state: str) -> DataFrame:
         hours = (
-            spark.read.parquet(hours_dir)
+            spark.read.parquet(state)
             .groupBy("symbol", "hour_ts")
             .agg(
                 F.sum("sum_dec").alias("sum_dec"),
@@ -2376,7 +2293,7 @@ def streaming_hopping_volume_parity(
         # each maintained hour bucket feeds exactly two hopping windows
         # (length/slide = 2) — the same Expand shape the batch query
         # plans over raw ticks, here over the tiny hour-state table
-        out = (
+        return (
             hours.select(
                 "symbol",
                 "sum_dec",
@@ -2406,10 +2323,8 @@ def streaming_hopping_volume_parity(
                 "avg_value",
             )
         )
-        # localCheckpoint: the result must outlive the temp dirs
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+
+    return replay(load_events(spark, sf_dir), "event_id", per_batch, serve)
 
 
 # --------------------------------------------------------------------------
@@ -2516,67 +2431,46 @@ def streaming_time_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces its own partials instead of double-counting them
     (exactly-once effect over at-least-once execution). State is
     buckets-sized (symbols × hours), never ticks-sized."""
-    import shutil
-    import tempfile
+    from ..streaming.ingest import replay
 
-    from ..streaming.ingest import read_events_stream
-
-    td = tempfile.mkdtemp(prefix="stream_rollup_")
-    src_dir = f"{td}/src"
-    hours_dir = f"{td}/state_hours"
-    try:
-        load_events(spark, sf_dir).repartitionByRange(3, "event_id").write.mode(
-            "overwrite"
-        ).parquet(src_dir)
-
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.groupBy(
-                    F.col("user_id").alias("symbol"),
-                    F.date_trunc("hour", "ts").alias("hour_ts"),
-                )
-                .agg(
-                    F.sum(F.col("value").cast("decimal(38,6)")).alias(
-                        "sum_dec"
-                    ),
-                    F.count(F.lit(1)).alias("n_events"),
-                )
-                .write.mode("overwrite")
-                .parquet(f"{hours_dir}/batch_id={batch_id}")
+    def per_batch(batch_df: DataFrame, batch_id: int, state: str) -> None:
+        (
+            batch_df.groupBy(
+                F.col("user_id").alias("symbol"),
+                F.date_trunc("hour", "ts").alias("hour_ts"),
             )
-
-        q = (
-            read_events_stream(spark, src_dir, max_files_per_trigger=1)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
+            .agg(
+                F.sum(F.col("value").cast("decimal(38,6)")).alias("sum_dec"),
+                F.count(F.lit(1)).alias("n_events"),
+            )
+            .write.mode("overwrite")
+            .parquet(f"{state}/batch_id={batch_id}")
         )
-        q.awaitTermination()
+
+    def grain(df: DataFrame, label: str, bucket) -> DataFrame:
+        return df.groupBy(
+            "symbol", bucket.alias("bucket_ts")
+        ).agg(
+            F.sum("sum_dec").cast("double").alias("sum_value"),
+            F.sum("n_events").alias("n_events"),
+        ).select(
+            "symbol",
+            F.lit(label).alias("grain"),
+            "bucket_ts",
+            "sum_value",
+            "n_events",
+        )
+
+    def serve(state: str) -> DataFrame:
         hours = (
-            spark.read.parquet(hours_dir)
+            spark.read.parquet(state)
             .groupBy("symbol", "hour_ts")
             .agg(
                 F.sum("sum_dec").alias("sum_dec"),
                 F.sum("n_events").alias("n_events"),
             )
         )
-
-        def grain(df: DataFrame, label: str, bucket) -> DataFrame:
-            return df.groupBy(
-                "symbol", bucket.alias("bucket_ts")
-            ).agg(
-                F.sum("sum_dec").cast("double").alias("sum_value"),
-                F.sum("n_events").alias("n_events"),
-            ).select(
-                "symbol",
-                F.lit(label).alias("grain"),
-                "bucket_ts",
-                "sum_value",
-                "n_events",
-            )
-
-        out = (
+        return (
             grain(hours, "hour", F.col("hour_ts"))
             .unionByName(
                 grain(hours, "day", F.date_trunc("day", "hour_ts"))
@@ -2585,7 +2479,5 @@ def streaming_time_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 grain(hours, "week", F.date_trunc("week", "hour_ts"))
             )
         )
-        # localCheckpoint: the result must outlive the temp dirs
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+
+    return replay(load_events(spark, sf_dir), "event_id", per_batch, serve)

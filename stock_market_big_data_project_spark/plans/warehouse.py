@@ -502,43 +502,23 @@ def streaming_scd2_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch query uses, under the SAME `_SCD2_SQL` oracle.  The replay
     is range-split by event_id into three micro-batches so days span
     batches; per-tick work is delta-sized, state is days × users."""
-    import shutil
-    import tempfile
+    from ..streaming.ingest import replay
 
-    from ..streaming.ingest import read_events_stream
-
-    td = tempfile.mkdtemp(prefix="stream_scd2_")
-    src_dir = f"{td}/src"
-    daily_dir = f"{td}/state_daily"
-    try:
-        load_events(spark, sf_dir).repartitionByRange(
-            3, "event_id"
-        ).write.mode("overwrite").parquet(src_dir)
-
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            order_key = F.struct("ts", "event_id")
-            (
-                batch_df.groupBy(
-                    "user_id", F.date_trunc("day", "ts").alias("day")
-                )
-                .agg(
-                    F.max_by("value", order_key).alias("close"),
-                    F.max(order_key).alias("okey"),
-                )
-                .write.mode("append")
-                .parquet(daily_dir)
+    def per_batch(batch_df: DataFrame, batch_id: int, state: str) -> None:
+        order_key = F.struct("ts", "event_id")
+        (
+            batch_df.groupBy("user_id", F.date_trunc("day", "ts").alias("day"))
+            .agg(
+                F.max_by("value", order_key).alias("close"),
+                F.max(order_key).alias("okey"),
             )
-
-        q = (
-            read_events_stream(spark, src_dir, max_files_per_trigger=1)
-            .writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{td}/_ckpt")
-            .start()
+            .write.mode("append")
+            .parquet(state)
         )
-        q.awaitTermination()
+
+    def serve(state: str) -> DataFrame:
         merged = (
-            spark.read.parquet(daily_dir)
+            spark.read.parquet(state)
             .groupBy("user_id", "day")
             .agg(F.max_by("close", "okey").alias("close"))
             .select(
@@ -549,7 +529,6 @@ def streaming_scd2_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-        # localCheckpoint: the result must outlive the temp dirs
-        return _scd2_from_daily(merged).localCheckpoint()
-    finally:
-        shutil.rmtree(td, ignore_errors=True)
+        return _scd2_from_daily(merged)
+
+    return replay(load_events(spark, sf_dir), "event_id", per_batch, serve)

@@ -13,10 +13,18 @@ recomputes everything (README.md:23). Natively:
 - OP-64 stateful last-value carry-forward → ``applyInPandasWithState``.
 
 Tests replay the events fixture through a file source and assert
-batch ≡ streaming on the same input (tests/test_streaming.py).
+batch ≡ streaming on the same input (tests/test_streaming.py); the
+registered ``streaming_*_parity`` queries replay their inputs through
+`replay` and serve the state their micro-batches leave at rest.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+import tempfile
+import time
+from typing import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -121,55 +129,6 @@ def dedup_within_watermark(stream: DataFrame, watermark: str = "2 hours") -> Dat
     )
 
 
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
-
-def read_documents_stream(
-    spark: SparkSession, dir_path: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-source replay of a continuously-crawled document corpus (the
-    LLM-pipeline twin of `read_events_stream`): new files = new
-    micro-batch; `max_files_per_trigger=1` forces one batch per file so
-    replay tests exercise cross-batch state."""
-    return (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .format("parquet")
-        .load(dir_path)
-    )
-
-
-EMBEDDINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ]
-)
-
-
-def read_embeddings_stream(
-    spark: SparkSession, dir_path: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-source replay of a live embedding append feed (vectors arrive
-    as documents are embedded) — the ingest side of the streaming
-    SemDeDup / incremental IVF-assignment path."""
-    return (
-        spark.readStream.schema(EMBEDDINGS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .format("parquet")
-        .load(dir_path)
-    )
-
-
 def clean_corpus_stream(stream: DataFrame) -> DataFrame:
     """The C4-style cleaning chain on a LIVE stream: language-ID → quality
     score → threshold filter (identical expressions to the batch
@@ -217,6 +176,71 @@ def run_to_memory(df: DataFrame, name: str) -> None:
         .start()
     )
     q.awaitTermination()
+
+
+def replay(
+    src: DataFrame,
+    split_by: str,
+    per_batch: Callable[[DataFrame, int, str], None],
+    serve: Callable[[str], DataFrame],
+    through: Callable[[DataFrame], DataFrame] = lambda stream: stream,
+) -> DataFrame:
+    """Replay ``src`` as an append-only file stream, then serve the state
+    its micro-batches left behind (the streaming-parity harness).
+
+    ``src`` is written as three ``split_by``-range parquet files with
+    modification times ascending in range order, and read back with
+    ``src``'s schema one file per trigger under ``availableNow`` — one
+    micro-batch per file, in range order, so state must carry across
+    batches. ``through`` maps that file stream to the stream under test
+    (a stateful operator; identity for the foreachBatch-maintained
+    parities), and ``per_batch(batch_df, batch_id, state_dir)`` runs on
+    each of its micro-batches. Once the stream has terminated,
+    ``serve(state_dir)`` builds the result from the accumulated state.
+
+    Source files, state and the stream checkpoint live in one temp dir
+    that is removed on the way out, also when the replay fails. The
+    result must outlive it, so it is returned eagerly localCheckpoint'd.
+    """
+    spark = src.sparkSession
+    td = tempfile.mkdtemp(prefix="replay_")
+    src_dir, state_dir = f"{td}/src", f"{td}/state"
+    try:
+        src.repartitionByRange(3, split_by).write.parquet(src_dir)
+        parts = sorted(p for p in os.listdir(src_dir) if p.endswith(".parquet"))
+        now = time.time()
+        for k, fname in enumerate(parts):
+            # the file source takes the oldest file first
+            mtime = now - 10 * (len(parts) - k)
+            os.utime(os.path.join(src_dir, fname), (mtime, mtime))
+        stream = (
+            spark.readStream.schema(src.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir)
+        )
+        q = (
+            through(stream)
+            .writeStream.foreachBatch(
+                lambda batch_df, batch_id: per_batch(batch_df, batch_id, state_dir)
+            )
+            .trigger(availableNow=True)
+            .option("checkpointLocation", f"{td}/_ckpt")
+            .start()
+        )
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+        return serve(state_dir).localCheckpoint()
+    finally:
+        shutil.rmtree(td, ignore_errors=True)
+
+
+def append_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
+    """`replay`'s ``per_batch`` for a stateful stream: append each
+    micro-batch's output rows to the state dir (the at-rest twin of a
+    memory sink; serve with ``spark.read.parquet``)."""
+    batch_df.write.mode("append").parquet(state_dir)
 
 
 def session_window_agg(

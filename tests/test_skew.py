@@ -270,10 +270,12 @@ def test_n_salts_zero_degenerates_row_identical(spark, skewed):
     assert two_stage_agg(big, ["k"], ["v"], n_salts=8).sort("k").collect() == plain_agg
 
 
-def test_wedge_pairs_salted_matches_plain(spark):
+@pytest.mark.parametrize("n_salts", [0, 1, 4])
+def test_wedge_pairs_salted_matches_plain(spark, n_salts):
     """wedge_pairs' hot-part salt (r13) is a pure plan rewrite: pair
     counts identical to the unsalted self-join on a hub-part fixture
-    (one part incident to half the nodes)."""
+    (one part incident to half the nodes) — also for n_salts <= 1, which
+    must degenerate to the plain join, not drop the hub's pairs."""
     from stock_market_big_data_project_spark.operators.graph import wedge_pairs
 
     # 600 incidences over 120 nodes x 40 parts; part 0 is a hub with
@@ -285,9 +287,32 @@ def test_wedge_pairs_salted_matches_plain(spark):
         (F.col("id") % 120).alias("c"),
     ).distinct()
     plain = wedge_pairs(op, "c", "p")
-    salted = wedge_pairs(op, "c", "p", hot_part_threshold=10, n_salts=4)
+    salted = wedge_pairs(op, "c", "p", hot_part_threshold=10, n_salts=n_salts)
     assert plain.exceptAll(salted).count() == 0
     assert salted.exceptAll(plain).count() == 0
     # the hot leg really fired: the hub part's degree exceeds the cut
     deg = op.groupBy("p").count().filter(F.col("count") > 10).count()
     assert deg >= 1
+
+
+def test_wedge_pairs_ignores_extra_columns(spark):
+    """An incidence list carrying one extra column gives the same pairs as
+    the bare (node, part) list — the extra column must not collide in the
+    part-keyed self-join."""
+    from stock_market_big_data_project_spark.operators.graph import wedge_pairs
+
+    op = spark.range(200).select(
+        (F.col("id") % 7).alias("p"), (F.col("id") % 50).alias("c")
+    ).distinct()
+    wide = op.withColumn("w", F.col("c") * 10)
+    plain = wedge_pairs(op, "c", "p")
+    assert plain.count() > 0
+    # both the plain join and the salted hot/cold split (parts 0-3 have
+    # degree 29 and go hot, parts 4-6 have degree 28 and stay cold)
+    for got in (
+        wedge_pairs(wide, "c", "p"),
+        wedge_pairs(wide, "c", "p", hot_part_threshold=28, n_salts=4),
+    ):
+        assert got.columns == plain.columns
+        assert plain.exceptAll(got).count() == 0
+        assert got.exceptAll(plain).count() == 0

@@ -169,3 +169,88 @@ def test_streaming_interval_join_equals_batch(spark, sf_dir, events_stream_dir):
         ).collect()
     }
     assert got == want and len(want) > 0
+
+
+def _record_state_dir(seen: list):
+    """A per_batch that records the state dir and appends the batch."""
+
+    def per_batch(batch_df, batch_id, state):
+        seen.append((state, batch_df.agg(F.min("k")).first()[0]))
+        batch_df.write.mode("append").parquet(state)
+
+    return per_batch
+
+
+def test_replay_removes_temp_dir_and_detaches_result(spark):
+    """replay runs one micro-batch per range file, in range order, removes
+    its temp dir, and returns a frame that still counts afterwards."""
+    import os
+
+    from stock_market_big_data_project_spark.streaming.ingest import replay
+
+    seen: list = []
+    src = spark.range(30).withColumnRenamed("id", "k")
+    out = replay(src, "k", _record_state_dir(seen), spark.read.parquet)
+    assert len(seen) == 3
+    mins = [m for _, m in seen]
+    assert mins == sorted(mins) and mins[0] == 0
+    assert not os.path.exists(os.path.dirname(seen[0][0]))
+    assert out.count() == 30
+    assert sorted(r.k for r in out.collect()) == list(range(30))
+
+
+def test_replay_of_empty_source_serves_empty_state(spark):
+    """An empty source still runs one (empty) micro-batch, so state dirs
+    that per_batch writes on every batch read back with their schema."""
+    from stock_market_big_data_project_spark.streaming.ingest import replay
+
+    seen: list = []
+    src = spark.range(0).withColumnRenamed("id", "k")
+    out = replay(src, "k", _record_state_dir(seen), spark.read.parquet)
+    assert len(seen) == 1
+    assert out.columns == ["k"] and out.count() == 0
+
+
+def test_replay_cleans_up_when_a_batch_fails(spark):
+    """A failing per_batch propagates, and leaves neither the temp dir nor
+    an active stream behind."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from stock_market_big_data_project_spark.streaming.ingest import replay
+
+    seen: list = []
+    record = _record_state_dir(seen)
+
+    def per_batch(batch_df, batch_id, state):
+        record(batch_df, batch_id, state)
+        raise RuntimeError("per_batch failed")
+
+    src = spark.range(30).withColumnRenamed("id", "k")
+    with pytest.raises(StreamingQueryException, match="per_batch failed"):
+        replay(src, "k", per_batch, spark.read.parquet)
+    assert len(seen) == 1
+    assert not os.path.exists(os.path.dirname(seen[0][0]))
+    assert spark.streams.active == []
+
+
+def test_stateful_parity_queries_register_no_tables(spark, sf_dir):
+    """The stateful-stream parities (formerly memory sinks, one uuid-named
+    session table per call) leave the session catalog as they found it."""
+    from stock_market_big_data_project_spark.plans import (
+        LOCAL_QUERIES,
+        QUERIES,
+        load_all_plans,
+    )
+
+    load_all_plans()
+    queries = {**LOCAL_QUERIES, **QUERIES}
+    before = {t.name for t in spark.catalog.listTables()}
+    for name in (
+        "streaming_batch_parity",
+        "streaming_stateful_ffill_parity",
+        "streaming_clean_corpus_parity",
+    ):
+        assert queries[name](spark, sf_dir).count() > 0
+    assert {t.name for t in spark.catalog.listTables()} == before

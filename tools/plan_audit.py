@@ -55,8 +55,9 @@ def section(spark: SparkSession, name: str, local: bool) -> str:
         return (
             f"## {name}{tier}\n\n"
             "- streaming harness: executes a Structured Streaming replay at "
-            "call time and returns the memory-sink table; audited via its "
-            "batch twin + tests/test_streaming.py, not a static plan\n"
+            "call time and returns a detached frame built from its state; "
+            "audited via its batch twin + tests/test_streaming.py, not a "
+            "static plan\n"
         )
     note = ""
     if name in EAGER_ITERATIVE:
